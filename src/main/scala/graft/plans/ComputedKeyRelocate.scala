@@ -55,7 +55,7 @@ import scala.jdk.CollectionConverters._
   */
 object ComputedKeyRelocate extends Rule[LogicalPlan] {
 
-  /** Escape hatch + A/B toggle (DiagChain measures pushed vs unpushed). */
+  /** Escape hatch + A/B toggle: `false` keeps computed keys in Spark. */
   val ConfKey = "spark.graft.computed_key_pushdown"
 
   override def apply(plan: LogicalPlan): LogicalPlan = {

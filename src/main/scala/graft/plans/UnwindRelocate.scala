@@ -85,7 +85,7 @@ case class RetainedGenerateInput(child: Expression) extends UnaryExpression {
   */
 object UnwindRelocate extends Rule[LogicalPlan] {
 
-  /** Escape hatch + A/B toggle (DiagChain measures pushed vs unpushed). */
+  /** Escape hatch + A/B toggle: `false` keeps explode() in Spark. */
   val ConfKey = "spark.graft.unwind_pushdown"
 
   /** Separate escape hatch for the OVER-JOIN transpose (r16). The

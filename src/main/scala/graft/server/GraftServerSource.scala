@@ -1,13 +1,12 @@
 package graft.server
 
 import graft.bson._
-import graft.query.{BQuery, BQueryJson, FilterTranslator}
-import graft.source.{FieldResolve, GroupAggParse, Planners}
+import graft.query.{BQuery, BQueryJson}
+import graft.source.{FieldResolve, GroupAggParse, Planners, PushRules}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
@@ -265,7 +264,6 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // MAP explode (r15): $objectToArray + $unwind of the synthetic kv
       // field; key/value columns read __graft_kv.k/.v via their mapping
       mapKv = options.get("unwind_kind").contains("map")))
-  private val unwindElement: Option[String] = options.get("unwind_element")
   /** POST-unwind query (accepted element-column filters). */
   private var unwindPost: BQuery = BQuery.True
 
@@ -280,7 +278,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     */
   private[server] val computedCols: Seq[graft.query.ComputedCol] =
     graft.query.ComputedCol.fromOptions(options)
-  private val computedOuts: Set[String] = computedCols.map(_.out).toSet
+  private val cols = PushRules.Columns(tableSchema, mapping, computedCols)
 
   private var required: StructType = tableSchema
   private var pushedQuery: BQuery = BQuery.True
@@ -311,19 +309,11 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     */
   override def pushTableSample(lower: Double, upper: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    // `sample_key` may name a nested subfield — the keep-predicate and
-    // the cursor projection both work on dotted paths
-    val keyCol = options.get("sample_key")
-      .flatMap(k => FieldResolve.resolveName(tableSchema, k, mapping))
-      .filter(r => graft.source.SamplePush.KeyTypes.contains(r.dataType))
-      // a COMPUTED sample key refuses (r17): a derived bin is a poor
-      // sampling key by construction (it collides all rows of a bin),
-      // and the hidden-carry machinery would need the $set on every
-      // path — refuse loudly rather than sample a missing field
-      .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-    val keyOk = keyCol.exists(k => graft.source.SamplePush
-      .keyAllowedUnderUnwind(k.docPath, unwind.map(_.path)))
-    val eligible = !withReplacement && keyOk &&
+    // a COMPUTED sample key refuses (r17): a derived bin is a poor
+    // sampling key by construction (it collides all rows of a bin), and
+    // the hidden-carry machinery would need the $set on every path
+    val keyCol = PushRules.sampleKey(cols, options, unwind.map(_.path))
+    val eligible = !withReplacement && keyCol.isDefined &&
       !options.contains("limit") &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty && joined.isEmpty
@@ -344,97 +334,22 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     org.apache.spark.sql.types.LongType
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // `_ns` metadata predicates are not document queries — residual; a
-    // filter touching the UNWOUND element column becomes the POST-unwind
-    // query (after `$unwind` the path holds the ELEMENT, so the normal
-    // translation carries exactly Spark's row semantics; parent-column
-    // conjuncts inside it commute, their values are per-parent constants)
-    val (metaFilters, rest) = filters.partition(
-      _.references.contains(GraftServerSource.NsMetaCol))
-    // posexplode POS filters join the element filters: post-unwind the
-    // synthetic pos field exists (includeArrayIndex on pipelines, a
-    // reader-injected match doc on the parent cursor), and int32
-    // literals compare numerically against its int64 values on both
-    // the wire and this matcher. Struct-element SUBFIELD references
-    // (`entry.lang` for explode(array<struct>)) are element-scoped too:
-    // translated pre-unwind they would carry ∃-element semantics
-    // null tests on ARRAY-typed columns stay residual (r15 latent-
-    // divergence hunt): the wire form `{$eq/$ne: null}` element-matches
-    // on a live server (`{p: null}` matches `p=[1,null]` and missing
-    // fields), while Spark's IsNull/IsNotNull test the column value
-    // itself — Spark re-checks residuals, so the cost is one codegen'd
-    // row test, never correctness. Checked BEFORE the element split: an
-    // ARRAY-typed unwound ELEMENT (nested arrays) has the same problem
-    // in the post-unwind $match
-    def arrayNullTest(f: Filter): Boolean = f match {
-      case org.apache.spark.sql.sources.IsNull(a) =>
-        FieldResolve.resolveName(tableSchema, a, mapping)
-          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      case org.apache.spark.sql.sources.IsNotNull(a) =>
-        FieldResolve.resolveName(tableSchema, a, mapping)
-          .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType])
-      case _ => false
-    }
-    val (arrayNullFilters, rest0) = rest.partition(arrayNullTest)
-    // COMPUTED columns (r17): find-land has no `$set`, so a pushed
-    // filter on a derived field would match nothing on the wire.
-    // EXCEPTION — null tests: `mod`/`pmod` are null exactly when their
-    // INPUT is null/missing (never otherwise; a non-numeric storage
-    // fails loud on both sides), so IsNull/IsNotNull on a computed
-    // column rewrite EXACTLY to the same test on its SOURCE field and
-    // push (Spark's join-key isnotnull inference lands here — without
-    // the rewrite one inferred conjunct would block every derived-key
-    // join push). Everything else stays residual; Spark re-checks over
-    // the reader-injected value (exact).
-    // The rewrite substitutes the SPARK column that reads the source
-    // field, NOT the raw doc path: the translator below re-applies the
-    // column_mapping, so a doc path that happens to equal another
-    // MAPPED spark column's name would translate to the wrong stored
-    // field (ADVICE r17). No unambiguous spark-side reader (hand-set
-    // options) → the test stays residual (exact over injected values).
-    def sourceSparkCol(out: String): Option[String] = {
-      val f = computedCols.find(_.out == out).get.field
-      mapping.collectFirst { case (s, d) if d == f => s }
-        .orElse(if (!mapping.contains(f)) Some(f) else None)
-    }
-    val rest1 = rest0.map {
-      case f @ org.apache.spark.sql.sources.IsNotNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNotNull(_))
-          .getOrElse(f)
-      case f @ org.apache.spark.sql.sources.IsNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNull(_))
-          .getOrElse(f)
-      case other => other
-    }
-    val (computedFilters, rest2) = rest1.partition(
-      _.references.exists(r => computedOuts.contains(r.split('.').head)))
-    val (elementFilters, docFilters) = rest2.partition(f =>
-      f.references.exists(r => graft.plans.UnwindRelocate.elementScoped(
-        r, unwindElement, options.get("unwind_pos"),
-        options.get("unwind_key"))))
-    val (postQ, postAccepted, postResidual) =
-      FilterTranslator.split(elementFilters, mapping)
-    unwindPost =
-      if (options.get("assume_uniform_storage").exists(_.toBoolean))
-        BQuery.uniformReadBracket(postQ)
-      else postQ
-    val (query, accepted, residual) = FilterTranslator.split(docFilters, mapping)
-    // under uniform storage every Long/Timestamp/String is stored as
-    // the ONE type this engine writes, so the read-semantics ReadLong*/
-    // ReadTime*/ReadStr(eq/regex) nodes rewrite to their exact BRACKET
-    // forms — renderable server-side (a $match/cursor query) instead of
-    // client-side residual re-checks, and the grouped/join pushdowns'
-    // fully-renderable gates then accept those filters too (a plain
-    // `WHERE _id > 5` no longer blocks the `$group` pipeline)
-    pushedQuery =
-      if (options.get("assume_uniform_storage").exists(_.toBoolean))
-        BQuery.uniformReadBracket(query)
-      else query
-    pushed = accepted ++ postAccepted
-    residuals = residual ++ postResidual ++ metaFilters ++
-      arrayNullFilters ++ computedFilters
+    // COMPUTED columns (r17): find-land has no `$set`, so a pushed filter
+    // on a derived field would match nothing on the wire; only their null
+    // tests push, rewritten to the source field (Spark's join-key
+    // isnotnull inference lands here — without the rewrite one inferred
+    // conjunct would block every derived-key join push). Under uniform
+    // storage the read-semantics nodes take their BRACKET forms, which
+    // render server-side, so the grouped/join pushdowns' fully-renderable
+    // gates accept them too (a plain `WHERE _id > 5` no longer blocks the
+    // `$group` pipeline)
+    val split = PushRules.splitFilters(filters, cols, options,
+      GraftServerSource.NsMetaCol, arrayNullsResidual = true,
+      uniformBrackets = options.get("assume_uniform_storage").exists(_.toBoolean))
+    pushedQuery = split.query
+    unwindPost = split.post
+    pushed = split.accepted
+    residuals = split.residual
     residuals
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -523,9 +438,8 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   override def pushTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection}
     if (joined.isDefined) return pushJoinedTopN(orders, n)
-    if (orders.isEmpty || aggPushed.isDefined || groupedAgg.isDefined ||
+    if (aggPushed.isDefined || groupedAgg.isDefined ||
         limit.isDefined || offset.isDefined || residuals.nonEmpty ||
         sample.isDefined) return false
     // over an unwound scan the top-n selects among UNWOUND rows: the
@@ -533,28 +447,16 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     // be the element column — post-unwind its doc path holds the
     // element — or parents; the bracket-safety gates below apply as-is)
     if (unwind.isDefined && !unwoundTailOk) return false
-    // order keys may be NESTED subfields: `{"meta.score": -1}` is a
-    // legal cursor sort doc (dotted-path key extraction is core server
-    // behavior — the reference's MongoPathRetriever convention); the
-    // bracket-safety gate applies to the LEAF type
-    val spec: Seq[Option[(String, Boolean)]] = orders.toSeq.map { o =>
-      import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
-      graft.source.FieldResolve.resolve(tableSchema, o.expression, mapping).flatMap { r =>
-        val typeOk = GraftServerScanBuilder.cursorOrderSafe(r.dataType, options,
-          Some(r.docPath))
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        // a COMPUTED order key has no stored field a cursor sort could
-        // walk (find-land has no $set) — refuse; the joined arm's
-        // pipeline $sort runs after the $set and accepts them
-        val storedOk = !computedOuts.contains(r.docPath.split('.').head)
-        if (typeOk && nullsOk && storedOk) Some((r.docPath, desc)) else None
-      }
+    // order keys may be NESTED subfields: `{"meta.score": -1}` is a legal
+    // cursor sort doc; the bracket-safety gate applies to the LEAF type.
+    // A COMPUTED order key has no stored field a cursor sort could walk
+    // — the joined arm's pipeline $sort runs after the $set and takes it
+    PushRules.topNKeys(orders, cols, r => GraftServerScanBuilder
+        .cursorOrderSafe(r.dataType, options, Some(r.docPath))) match {
+      case Some(keys) =>
+        topN = Some((keys.map { case (r, desc) => (r.docPath, desc) }, n)); true
+      case None => false
     }
-    if (spec.contains(None)) false
-    else { topN = Some((spec.flatten, n)); true }
   }
 
   /** `ORDER BY ... LIMIT n` over a PUSHED JOIN: a `$sort`+`$limit` tail
@@ -568,24 +470,17 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   private def pushJoinedTopN(
       orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
     val j = joined.get
-    if (orders.isEmpty || joinedAgg.isDefined || joinLimit.isDefined ||
+    if (joinedAgg.isDefined || joinLimit.isDefined ||
         joinTopN.isDefined || joinSamples.nonEmpty || joinOffset.isDefined)
       return false
-    val spec: Seq[Option[(String, Boolean)]] = orders.toSeq.map { o =>
-      FieldResolve.resolve(j.schema, o.expression).flatMap { r =>
-        val sideOpts = joinedColOpts.getOrElse(r.docPath.split('.').head, options)
-        val typeOk = GraftServerScanBuilder.cursorOrderSafe(r.dataType, sideOpts)
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        if (typeOk && nullsOk) Some((r.docPath, desc)) else None
-      }
+    PushRules.topNKeys(orders, PushRules.Columns(j.schema, Map.empty, Nil),
+        r => GraftServerScanBuilder.cursorOrderSafe(r.dataType,
+          joinedColOpts.getOrElse(r.docPath.split('.').head, options))) match {
+      case Some(keys) =>
+        joinTopN = Some((keys.map { case (r, desc) => (r.docPath, desc) }, n)); true
+      case None => false
     }
-    if (spec.contains(None)) false
-    else { joinTopN = Some((spec.flatten, n)); true }
   }
 
   /** Aggregate pushdown, two strategies in preference order:
@@ -633,7 +528,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     def sideOpts(r: FieldResolve.Ref): Map[String, String] =
       joinedColOpts.getOrElse(r.docPath.split('.').head, options)
     GroupAggParse.parse(aggregation,
-      e => graft.source.FieldResolve.resolve(j.schema, e),
+      e => FieldResolve.resolve(j.schema, e),
       r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
       r => GraftServerScanBuilder.aggValueSafe(r.dataType, sideOpts(r)),
       r => GraftServerScanBuilder.sumValueSafe(r.dataType, sideOpts(r))) match {
@@ -646,31 +541,19 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   }
 
   private def tryProbeAggregation(aggregation: Aggregation): Boolean = {
-    import graft.source.AggPush
     val eligible =
       pushedQuery == BQuery.True && !options.contains("query") &&
         limit.isEmpty && sample.isEmpty && joined.isEmpty && unwind.isEmpty
     if (!eligible) return false
     // probe columns may be nested subfields — the sorted limit-1 probe
-    // cursor sorts and projects by dotted path natively
-    def named(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[(String, org.apache.spark.sql.types.DataType)] =
-      FieldResolve.resolve(tableSchema, e, mapping)
-        .filter(r => GraftServerScanBuilder.aggValueSafe(r.dataType, options,
-          Some(r.docPath)))
-        // a COMPUTED column has no stored field the sorted limit-1
-        // probe could walk (r17) — the grouped pipeline path (with its
-        // $set) handles aggregates over derived fields instead
-        .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-        .map(r => (r.docPath, r.dataType))
-    val items = aggregation.aggregateExpressions.toSeq.map {
-      case _: aggregate.CountStar => Some(AggPush.RowCount)
-      case m: aggregate.Min => named(m.column).map { case (c, t) => AggPush.MinOf(c, t) }
-      case m: aggregate.Max => named(m.column).map { case (c, t) => AggPush.MaxOf(c, t) }
-      case _ => None
+    // cursor sorts and projects by dotted path natively. A COMPUTED column
+    // has no stored field to walk (r17): the grouped pipeline (with its
+    // $set) handles aggregates over derived fields instead
+    PushRules.globalAggregates(aggregation, cols, r => GraftServerScanBuilder
+        .aggValueSafe(r.dataType, options, Some(r.docPath))) match {
+      case Some(items) => aggPushed = Some(items); true
+      case None => false
     }
-    if (items.isEmpty || items.contains(None)) false
-    else { aggPushed = Some(items.flatten); true }
   }
 
   /** GROUPED / filtered-global aggregate pushdown — translated to one
@@ -687,7 +570,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     * `_id: null` global pipeline — `SELECT count(*) ... WHERE x`
     * answers in one round-trip instead of a scan); aggregates are
     * COUNT(*) / COUNT(col) / MIN / MAX over the cursor-safe
-    * [[GraftServerScanBuilder.AggTypes]] plus SUM over exact numerics
+    * [[GraftServerScanBuilder.aggValueSafe]] types plus SUM over exact numerics
     * (AVG never reaches here by name: Spark rewrites a partial-pushdown
     * AVG into SUM+COUNT first); the WHOLE pushed query must render
     * server-side (a residual cannot be re-checked after grouping — the
@@ -698,21 +581,17 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
         topN.isDefined || residuals.nonEmpty ||
         // the server-side $group computes over the UNSAMPLED collection
         sample.isDefined || joined.isDefined) return false
-    val fullQuery = BQuery.and(GraftServerSource.optionQuery(options), pushedQuery)
-    val planned = QueryDocs.plan(fullQuery)
-    if (!planned.isExact || planned.keyBounds.isDefined) return false
     // the POST-unwind $match sits between $unwind and $group — it must
     // render fully too (its rows are gone after grouping)
-    val postPlanned = QueryDocs.plan(unwindPost)
-    if (!postPlanned.isExact || postPlanned.keyBounds.isDefined) return false
+    if (!preQueryPlan.rendersFully || !QueryDocs.plan(unwindPost).rendersFully)
+      return false
     // group keys and aggregate inputs may be NESTED subfields — the
     // resolver walks the nested StructType; `$group: {_id: "$meta.lang"}`
     // is native MQL, and [[QueryDocs.groupStageDoc]] sanitizes the
     // dotted names a compound `_id` / accumulator FIELD cannot carry.
     // Zero aggregates + >=1 group key = SELECT DISTINCT: a `$group`
     // with only `_id` answers it in #distinct-keys docs per namespace.
-    GroupAggParse.parse(aggregation,
-      e => graft.source.FieldResolve.resolve(tableSchema, e, mapping),
+    GroupAggParse.parse(aggregation, cols.resolve,
       r => GraftServerScanBuilder.GroupKeyTypes.contains(r.dataType),
       r => GraftServerScanBuilder.aggValueSafe(r.dataType, options,
         Some(r.docPath)),
@@ -800,10 +679,7 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
       // fine on the DRIVING side (the pipeline renders split KeyRanges
       // bracket-style); the lookup side re-checks below.
       preQueryPlan.isExact &&
-      (unwind.isEmpty || {
-        val post = QueryDocs.plan(unwindPost)
-        post.isExact && post.keyBounds.isEmpty
-      })
+      (unwind.isEmpty || QueryDocs.plan(unwindPost).rendersFully)
 
   /** The server-render split of this side's full builder-time query
     * (option-level AND pushed) — the join gates' renderability input. */
@@ -1288,41 +1164,17 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
     */
   private def unwoundTailOk: Boolean =
     unwind.isDefined && residuals.isEmpty &&
-      !options.contains("sort") && !options.contains("limit") && {
-        val pre = QueryDocs.plan(
-          BQuery.and(GraftServerSource.optionQuery(options), pushedQuery))
-        val post = QueryDocs.plan(unwindPost)
-        pre.isExact && pre.keyBounds.isEmpty &&
-          post.isExact && post.keyBounds.isEmpty
-      }
+      !options.contains("sort") && !options.contains("limit") &&
+      preQueryPlan.rendersFully && QueryDocs.plan(unwindPost).rendersFully
 
-  /** Pre-unwind PARENT pruning ([[BQuery.parentPrune]]): under a
-    * non-outer `$unwind` with a pushed post-unwind match, parents with
+  /** Pre-unwind PARENT pruning ([[PushRules.unwindPrune]]): parents with
     * no satisfying element never cross the wire — `$elemMatch` can walk
-    * a multikey index where the post `$match` scans unwound rows. A
-    * prune, not a filter (the exact post match still runs), so it is
-    * conjoined only when it renders fully server-side: a client-side
-    * superset re-check would be pure overhead on top of the post match.
-    * Skipped for ARRAY/MAP-typed elements (nested-array `$elemMatch`
-    * traversal is a documented matcher/wire divergence) and for OUTER
-    * unwinds (a never-matching array still owes its null-element row
-    * to a null-matching post query).
-    */
-  private def unwindPrune: BQuery = {
-    val safe = unwind.exists(u => !u.preserveNullAndEmpty && !u.mapKv) &&
-      unwindElement.forall(e => tableSchema.fields.find(_.name == e).forall(
-        _.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType |
-               _: org.apache.spark.sql.types.MapType => false
-          case _ => true
-        }))
-    if (!safe || unwindPost == BQuery.True) BQuery.True
-    else {
-      val prune = BQuery.parentPrune(unwindPost, unwind.get.path)
-      val planned = QueryDocs.plan(prune)
-      if (planned.isExact && planned.keyBounds.isEmpty) prune else BQuery.True
-    }
-  }
+    * a multikey index where the post `$match` scans unwound rows. Kept
+    * only when it renders fully server-side. */
+  private def unwindPrune: BQuery = PushRules.unwindPrune(
+    unwind.filter(u => !u.preserveNullAndEmpty && !u.mapKv).map(_.path),
+    options.get("unwind_element"), tableSchema, unwindPost,
+    accept = q => QueryDocs.plan(q).rendersFully)
 }
 
 /** A pushed grouped aggregation: the group columns (and their Spark
@@ -1332,18 +1184,8 @@ final class GraftServerScanBuilder(tableSchema: StructType, options: Map[String,
   */
 final case class ServerGroupedAgg(
     groupCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]) {
-  def schema: StructType = StructType(
-    groupCols.map { case (c, dt) =>
-      org.apache.spark.sql.types.StructField(c, dt)
-    } ++ items.map { case (g, dt) =>
-      org.apache.spark.sql.types.StructField(g.alias, dt)
-    })
-  override def toString: String =
-    (if (groupCols.isEmpty) "GLOBAL"
-     else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +
-      s" [${items.map(_._1.alias).mkString(", ")}]"
-}
+    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)])
+    extends graft.source.PushedGroupBy
 
 /** A pushed equi-join, held by the LEFT (driving) builder after
   * [[GraftServerScanBuilder.pushDownJoin]]: both sides' projections as
@@ -1704,15 +1546,10 @@ object GraftServerScanBuilder {
     * correctly) — the check is therefore sound, not just a heuristic. */
   def aggValueSafe(dt: org.apache.spark.sql.types.DataType,
       options: Map[String, String],
-      docField: Option[String] = None): Boolean = {
-    import org.apache.spark.sql.types._
-    val always = Set[DataType](IntegerType, DoubleType, BooleanType, DateType)
-    val uniform = Set[DataType](LongType, TimestampType)
-    val uniformOk = options.get("assume_uniform_storage").exists(_.toBoolean)
-    if (dt == StringType)
-      uniformOk && docField.exists(f => asciiCols(options).contains(f))
-    else always.contains(dt) || (uniform.contains(dt) && uniformOk)
-  }
+      docField: Option[String] = None): Boolean =
+    // the server folds `$min`/`$max` in the same stored order a cursor
+    // sorts in, so the two gates coincide
+    cursorOrderSafe(dt, options, docField)
 
   /** Fail-loud arm of the `ascii_columns` contract on ORDERED pushdown
     * RESULTS (r18): a returned min/max/top-n key value that is
@@ -1759,15 +1596,7 @@ object GraftServerScanBuilder {
       (dt == LongType && options.get("assume_uniform_storage").exists(_.toBoolean))
   }
 
-  val AggTypes: Set[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    // DateType is SINGLE-bracket: only BDate storage reads as a date
-    // (RowCodec), and epoch-day flooring is monotone over BSON date
-    // order — a stored-order min/max IS a read-order min/max
-    Set(IntegerType, LongType, DoubleType, BooleanType, TimestampType, DateType)
-  }
-
-  /** Types usable as a pushed GROUP key. Wider than [[AggTypes]]:
+  /** Types usable as a pushed GROUP key. Wider than [[aggValueSafe]]:
     * grouping needs only read-value EQUALITY to be refined by the
     * server's grouping (partial pushdown re-merges), not a faithful
     * cross-bracket ORDER — so strings, unsafe for min/max/top-n, are
@@ -1830,8 +1659,6 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     unwoundTails: Boolean = false)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics with SupportsReportOrdering {
-  import graft.source.{AggPush, RuntimeFilters}
-
   /** Spark column -> document field (column_mapping, r14 on the server
     * transport); pushdown resolution happened in the builder — the scan
     * only needs it for runtime filters, ordering reports, and the
@@ -1841,10 +1668,6 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
       .getOrElse(Map.empty)
 
 
-  /** The Spark column that READS doc field `f` (mapping-aware inverse). */
-  private def sparkColFor(f: String): Option[String] =
-    mapping.find(_._2 == f).map(_._1)
-      .orElse(if (mapping.contains(f)) None else Some(f))
 
   /** collStats-based size report — the stats role collstats plays in the
     * reference's planning (MongoSplitterFactory.java:66-83), surfaced to
@@ -1878,7 +1701,7 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     * Catalyst.
     */
   override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    options.get("sort").flatMap(sparkColFor) match {
+    options.get("sort").flatMap(PushRules.sparkColFor(mapping, _)) match {
       case Some(c) if pushedAgg.isEmpty && topN.isEmpty && grouped.isEmpty &&
           unwind.isEmpty &&
           requiredSchema.fields.exists(f => f.name == c &&
@@ -1913,38 +1736,18 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
       // match nothing
       .filterNot(k => graft.query.ComputedCol.fromOptions(options)
         .exists(_.out == k))
-      .flatMap(sparkColFor)
+      .flatMap(PushRules.sparkColFor(mapping, _))
       .filter(requiredSchema.fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
 
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val parsed = predicates.toSeq.flatMap(RuntimeFilters.parse)
-    val merged = parsed.groupBy(_._1).map { case (c, vs) =>
-      c -> vs.flatMap(_._2).distinct
-    }
-    // a degenerate giant IN-set costs more per row than it prunes
-    runtimeIn =
-      if (merged.valuesIterator.map(_.size).sum > 10000) Map.empty else merged
-  }
+  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+    runtimeIn = PushRules.runtimeIn(predicates, identity)
 
-  /** The cursor query with runtime IN-sets AND-composed, read-semantics
-    * string/long forms first (the join compares READ values).
-    */
+  /** The cursor query with runtime IN-sets AND-composed. */
   private def queryWithRuntime: BQuery =
     runtimeIn.foldLeft(query) { case (acc, (col, vs)) =>
-      val f = mapping.getOrElse(col, col)
-      val strs = vs.collect { case BString(s) => s }
-      val longs = vs.collect { case BInt64(x) => x }
-      // TimestampType runtime values arrive as BDate millis; the join
-      // compares READ values, so match BOTH timestamp storages
-      val dates = vs.collect { case BDate(ms) => ms }
-      BQuery.and(acc,
-        if (strs.size == vs.size) BQuery.ReadStrIn(f, strs)
-        else if (longs.size == vs.size) BQuery.ReadLongIn(f, longs)
-        else if (dates.size == vs.size && vs.nonEmpty)
-          BQuery.ReadTimeIn(f, dates.map(_ * 1000L))
-        else BQuery.In(f, vs))
+      BQuery.and(acc, PushRules.runtimeInQuery(mapping.getOrElse(col, col), vs))
     }
 
   /** Structured Streaming entry: the micro-batch TAILING stream
@@ -1967,20 +1770,8 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
     new GraftServerMicroBatchStream(requiredSchema, query, options)
   }
 
-  override def readSchema(): StructType = (grouped, pushedAgg) match {
-    case (Some(g), _) =>
-      // Spark's grouped-pushdown layout: group columns first, then the
-      // aggregate columns, matching its zip in V2ScanRelationPushDown
-      g.schema
-    case (None, Some(items)) =>
-      import org.apache.spark.sql.types._
-      StructType(items.map {
-        case AggPush.RowCount => StructField("count(*)", LongType, nullable = false)
-        case AggPush.MinOf(c, t) => StructField(s"min($c)", t)
-        case AggPush.MaxOf(c, t) => StructField(s"max($c)", t)
-      })
-    case _ => requiredSchema
-  }
+  override def readSchema(): StructType =
+    PushRules.readSchema(grouped, pushedAgg, requiredSchema)
   override def toBatch: Batch = this
   override def description(): String =
     s"graftserver ns=${options.getOrElse("ns", "?")} query=$query" +
@@ -2051,7 +1842,7 @@ final class GraftServerScan(requiredSchema: StructType, query: BQuery,
       GraftServerSource.nsList(options).flatMap { ns =>
         val coll = new ServerCollection(client, ns)
         var splits = coll.planSplits(key, target)
-        sparkColFor(key).flatMap(runtimeIn.get).foreach(vs =>
+        PushRules.sparkColFor(mapping, key).flatMap(runtimeIn.get).foreach(vs =>
           splits = Planners.pruneByValues(splits, vs))
         if (options.get("filter_empty").exists(_.toBoolean) && query != BQuery.True)
           splits = Planners.pruneEmpty(splits, coll.stats(key), query)
@@ -2669,8 +2460,10 @@ final class GraftServerDataWriter(partitionId: Int, writeSchema: StructType,
   }
 
   private def flush(): Unit = if (buf.nonEmpty) {
-    client.bulkWrite(ns, buf.iterator, ordered)
+    val result = client.bulkWrite(ns, buf.iterator, ordered)
     buf.clear()
+    graft.store.BulkResult.unignoredErrors(result, options, "graftserver")
+      .foreach(msg => throw new IllegalStateException(msg))
   }
 
   override def commit(): WriterCommitMessage = {

@@ -67,6 +67,9 @@ object QueryDocs {
       serverQuery: BDoc,
       residual: Option[BQuery]) {
     def isExact: Boolean = residual.isEmpty
+    /** Exact with no cursor key bounds: the whole query renders as one
+      * `$match` (what pipelines need — they have no min/max bounds). */
+    def rendersFully: Boolean = isExact && keyBounds.isEmpty
   }
 
   def plan(q: BQuery): ServerPlan = {

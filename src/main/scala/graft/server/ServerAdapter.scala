@@ -551,12 +551,23 @@ final class FakeServerClient(rootDir: Option[String] = None)
     // ships only the projection; the stand-in's analog saves the decode)
     val needed: Option[Set[String]] = q.projection.map(p =>
       p.toSet ++ BQuery.fieldPaths(q.query) ++ q.sortSpec.map(_._1))
-    val matching = coll(ns).readAll(needed).filter(q.query.matches)
-    val docs: Iterator[BDoc] = q.sortSpec match {
-      case Seq() => matching
+    cursorTail(coll(ns).readAll(needed).filter(q.query.matches),
+      q.sortSpec, q.skip, q.limit, q.projection)
+  }
+
+  /** The cursor tail of [[find]] and [[unwoundRead]]: the `$sort` (stored
+    * values, BSON cross-type order; compound keys break earlier-key ties,
+    * each in its own ±1 direction), then skip, limit (< 0 = none) and
+    * projection. A bounded sort (skip+limit) keeps only that many docs in
+    * a heap instead of sorting everything — the index-walk cost shape of
+    * a real server's sort-with-limit; stability (file order on ties)
+    * matches the full stable sort exactly. Streams unless a sort forces
+    * materialization. */
+  private def cursorTail(docs: Iterator[BDoc], sortSpec: Seq[(String, Boolean)],
+      skip: Long, limit: Long, projection: Option[Seq[String]]): Iterator[BDoc] = {
+    val sorted: Iterator[BDoc] = sortSpec match {
+      case Seq() => docs
       case spec =>
-        // compound cursor sort: later keys break earlier-key ties, each
-        // in its own ±1 direction (the server's sort-doc semantics)
         val cmp: Ordering[BDoc] = (a, b) => {
           var r = 0
           val it = spec.iterator
@@ -568,21 +579,14 @@ final class FakeServerClient(rootDir: Option[String] = None)
           }
           r
         }
-        // a bounded cursor (skip+limit) keeps only that many docs in a
-        // heap instead of sorting the whole store — the index-walk cost
-        // shape of a real server's sort-with-limit; stability (file
-        // order on ties) matches the full stable sort exactly
-        val bound =
-          if (q.limit >= 0) q.skip + q.limit
-          else -1L
+        val bound = if (limit >= 0) skip + limit else -1L
         if (bound >= 0 && bound < Int.MaxValue)
-          FakeServerClient.stableTopK(matching, cmp, bound.toInt)
-        else matching.toVector.sorted(cmp).iterator
+          FakeServerClient.stableTopK(docs, cmp, bound.toInt)
+        else docs.toVector.sorted(cmp).iterator
     }
-    var it: Iterator[BDoc] = docs.drop(
-      math.min(q.skip, Int.MaxValue.toLong).toInt)
-    if (q.limit >= 0) it = it.take(math.min(q.limit, Int.MaxValue.toLong).toInt)
-    q.projection match {
+    var it: Iterator[BDoc] = sorted.drop(math.min(skip, Int.MaxValue.toLong).toInt)
+    if (limit >= 0) it = it.take(math.min(limit, Int.MaxValue.toLong).toInt)
+    projection match {
       // dotted paths re-NEST, exactly like a real server's {"a.b": 1}
       // projection (consumers read projected values by path)
       case Some(fields) => it.map(QueryDocs.projector(fields))
@@ -756,33 +760,7 @@ final class FakeServerClient(rootDir: Option[String] = None)
     val post =
       if (postQuery == BQuery.True) unwound
       else unwound.filter(postQuery.matches)
-    val sorted = sortSpec match {
-      case Seq() => post
-      case spec =>
-        val cmp: Ordering[BDoc] = (a, b) => {
-          var r = 0
-          val it = spec.iterator
-          while (r == 0 && it.hasNext) {
-            val (k, desc) = it.next()
-            val c = BsonOrdering.compare(
-              a.getPath(k).getOrElse(BNull), b.getPath(k).getOrElse(BNull))
-            r = if (desc) -c else c
-          }
-          r
-        }
-        // bounded tail: keep skip+limit rows in a heap, not the full set
-        val bound = if (limit >= 0) skip + limit else -1L
-        if (bound >= 0 && bound < Int.MaxValue)
-          FakeServerClient.stableTopK(post, cmp, bound.toInt)
-        else post.toVector.sorted(cmp).iterator
-    }
-    var it: Iterator[BDoc] = sorted.drop(
-      math.min(skip, Int.MaxValue.toLong).toInt)
-    if (limit >= 0) it = it.take(math.min(limit, Int.MaxValue.toLong).toInt)
-    projection match {
-      case Some(fields) => it.map(QueryDocs.projector(fields))
-      case None => it
-    }
+    cursorTail(post, sortSpec, skip, limit, projection)
   }
 
   /** The `$lookup` equi-join, evaluated as a hash join over the store

@@ -2,13 +2,12 @@ package graft.source
 
 import graft.bson._
 import graft.files.BsonFiles
-import graft.query.{BQuery, BQueryJson, FilterTranslator, NumericNullEdge, RegexDialect, UpdateModel}
+import graft.query.{BQuery, BQueryJson, NumericNullEdge, RegexDialect, UpdateModel}
 import graft.store.BsonCollection
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.expressions.aggregate
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
@@ -381,19 +380,14 @@ object GroupAgg {
   final case class SumOf(col: String, alias: String) extends GroupAgg
 }
 
-/** A pushed grouped aggregation on the FILE source: group columns (with
-  * their Spark types — empty for a filtered-GLOBAL aggregate), the TABLE
-  * types of every aggregate input column (for the projected decode), and
-  * each aggregate with its partial-result Spark type. Each byte-split
-  * folds its rows into per-group partial rows; the pushdown is PARTIAL,
-  * so Spark's final aggregate re-groups and merges them — the same
-  * protocol as the global per-file partials and the server's `$group`
-  * pipeline.
+/** A pushed grouped aggregation, either transport: group columns with
+  * their Spark types (empty for a filtered-GLOBAL aggregate) and each
+  * aggregate with its partial-result Spark type. The pushdown is PARTIAL,
+  * so Spark's final aggregate re-groups and merges the partial rows.
   */
-final case class FileGroupedAgg(
-    groupCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-    inputTypes: Map[String, org.apache.spark.sql.types.DataType],
-    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]) {
+trait PushedGroupBy {
+  def groupCols: Seq[(String, org.apache.spark.sql.types.DataType)]
+  def items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]
   def schema: StructType = StructType(
     groupCols.map { case (c, dt) => StructField(c, dt) } ++
       items.map { case (g, dt) => StructField(g.alias, dt) })
@@ -402,6 +396,17 @@ final case class FileGroupedAgg(
      else s"GROUP BY ${groupCols.map(_._1).mkString(", ")}") +
       s" [${items.map(_._1.alias).mkString(", ")}]"
 }
+
+/** A pushed grouped aggregation on the FILE source, plus the TABLE types
+  * of every aggregate input column (for the projected decode). Each
+  * byte-split folds its rows into per-group partial rows — the same
+  * protocol as the global per-file partials and the server's `$group`
+  * pipeline.
+  */
+final case class FileGroupedAgg(
+    groupCols: Seq[(String, org.apache.spark.sql.types.DataType)],
+    inputTypes: Map[String, org.apache.spark.sql.types.DataType],
+    items: Seq[(GroupAgg, org.apache.spark.sql.types.DataType)]) extends PushedGroupBy
 
 final class GraftScanBuilder(tableSchema: StructType, options: Map[String, String])
     extends ScanBuilder with SupportsPushDownFilters
@@ -440,63 +445,21 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     * pushed-query match — grouped-aggregate partials fold over them
     * like any column. The pushed query itself evaluates on STORED docs,
     * so filters on a computed column stay residual (null tests rewrite
-    * exactly to the source field — pmod/mod are null iff their input
-    * is); TopN / min-max probes / sample keys refuse the synthetic
-    * field, mirroring the server transport's gates. */
-  private val computedCols: Seq[graft.query.ComputedCol] =
-    graft.query.ComputedCol.fromOptions(options)
-  private val computedOuts: Set[String] = computedCols.map(_.out).toSet
+    * exactly to the source field); TopN / min-max probes / sample keys
+    * refuse the synthetic field, mirroring the server transport's gates. */
+  private val cols = PushRules.Columns(tableSchema, mapping,
+    graft.query.ComputedCol.fromOptions(options))
 
   private var residualFilters: Array[Filter] = Array.empty
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // a predicate on the `_file` metadata column is NOT a document
-    // query — residual; one touching the UNWOUND element column becomes
-    // the POST-unwind query (after the unwind the path holds the
-    // ELEMENT, so the normal translation carries Spark's row semantics)
-    val (metaFilters, rest0) = filters.partition(
-      _.references.contains(GraftBsonSource.FileMetaCol))
-    // COMPUTED columns: null tests rewrite to the SOURCE field (exact);
-    // everything else on a derived field is residual (the reader's
-    // query match runs on STORED docs, before injection)
-    // rewrite to the SPARK column that reads the source field, never
-    // the raw doc path — the translator re-applies the column_mapping,
-    // so a colliding doc path would address the wrong stored field
-    // (ADVICE r17); no unambiguous reader → stays residual
-    def sourceSparkCol(out: String): Option[String] = {
-      val f = computedCols.find(_.out == out).get.field
-      mapping.collectFirst { case (s, d) if d == f => s }
-        .orElse(if (!mapping.contains(f)) Some(f) else None)
-    }
-    val rest1 = rest0.map {
-      case f @ org.apache.spark.sql.sources.IsNotNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNotNull(_))
-          .getOrElse(f)
-      case f @ org.apache.spark.sql.sources.IsNull(a)
-          if computedOuts.contains(a) =>
-        sourceSparkCol(a).map(org.apache.spark.sql.sources.IsNull(_))
-          .getOrElse(f)
-      case other => other
-    }
-    val (computedFilters, rest) = rest1.partition(
-      _.references.exists(r => computedOuts.contains(r.split('.').head)))
-    // a filter touching the element (or a struct-element SUBFIELD —
-    // `entry.lang` for explode(array<struct>), which pre-unwind would
-    // carry ∃-element semantics) — or the posexplode POS column, whose
-    // injected field also exists only post-unwind — becomes the
-    // POST-unwind query (the reader injects pos before evaluating it)
-    val (elementFilters, docFilters) = rest.partition(f =>
-      f.references.exists(r => graft.plans.UnwindRelocate.elementScoped(
-        r, options.get("unwind_element"), options.get("unwind_pos"),
-        options.get("unwind_key"))))
-    val (postQ, postAccepted, postResidual) =
-      FilterTranslator.split(elementFilters, mapping)
-    unwindPost = postQ
-    val (query, accepted, residual) = FilterTranslator.split(docFilters, mapping)
-    pushedQuery = query
-    pushed = accepted ++ postAccepted
-    residualFilters = residual ++ postResidual ++ metaFilters ++ computedFilters
+    val split = PushRules.splitFilters(filters, cols, options,
+      GraftBsonSource.FileMetaCol, arrayNullsResidual = false,
+      uniformBrackets = false)
+    pushedQuery = split.query
+    unwindPost = split.post
+    pushed = split.accepted
+    residualFilters = split.residual
     residualFilters
   }
 
@@ -520,23 +483,14 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
 
   override def pushTableSample(lower: Double, upper: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    // `sample_key` may name a NESTED subfield (`meta.id`): resolve
-    // through the nested StructType; the keep-predicate extracts by
-    // dotted path either way
-    val keyCol = options.get("sample_key")
-      .flatMap(k => FieldResolve.resolveName(tableSchema, k, mapping))
-      .filter(r => SamplePush.KeyTypes.contains(r.dataType))
-      // a COMPUTED sample key refuses (r17 — mirrors the server gate)
-      .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-    val keyOk = keyCol.exists(k =>
-      SamplePush.keyAllowedUnderUnwind(k.docPath, unwind.map(_.path)))
-    val eligible = !withReplacement && keyOk &&
+    val key = PushRules.sampleKey(cols, options, unwind.map(_.path))
+    val eligible = !withReplacement && key.isDefined &&
       !options.contains("collections") && !options.contains("limit") &&
       limit.isEmpty && offset.isEmpty && topN.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty
     if (!eligible) false
     else {
-      sample = Some(SamplePush(keyCol.get.docPath, lower, upper, seed))
+      sample = Some(SamplePush(key.get.docPath, lower, upper, seed))
       true
     }
   }
@@ -589,51 +543,35 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
 
   override def pushTopN(orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
       n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
     // option-level `limit` is a PER-PARTITION cursor limit over cursor
     // order; a pushed top-n would re-sort before it and change which
     // rows it keeps — refuse rather than reorder an explicit option
     // over an unwound scan the top-n selects among UNWOUND rows (the
     // reader's bounded heap runs post-unwind; element-column keys read
     // the element through its array-path mapping)
-    val eligible = orders.nonEmpty && residualFilters.isEmpty &&
+    val eligible = residualFilters.isEmpty &&
       aggPushed.isEmpty && groupedAgg.isEmpty && offset.isEmpty &&
       sample.isEmpty &&
       !options.contains("sort") && !options.contains("collections") &&
       !options.contains("limit")
     if (!eligible) return false
-    // order keys may be NESTED subfields (`meta.score` arrives as a
-    // multi-part FieldReference): resolve through the nested StructType
-    // to the leaf type; the reader's selection and the projected decoder
-    // already work on full dotted paths
-    val spec: Seq[Option[(String, Boolean, org.apache.spark.sql.types.DataType)]] =
-      orders.toSeq.map { o =>
-        val desc = o.direction == SortDirection.DESCENDING
-        val nullsOk =
-          if (desc) o.nullOrdering == NullOrdering.NULLS_LAST
-          else o.nullOrdering == NullOrdering.NULLS_FIRST
-        // STRING order keys (r18): admitted under uniform storage alone
-        // — the reader's bounded heap compares READ values itself, and
-        // its string comparator is CODE-POINT order (exactly Spark's
-        // UTF8String/UTF-8-byte order, GraftPartitionReader.cmpStrings),
-        // so the selection is Spark-exact for ANY strings — no
-        // ascii_columns declaration needed on this transport (unlike
-        // the server arm, where the CURSOR owns the order). Uniform
-        // storage is still required: a non-uniform string read spans
-        // four storage brackets the heap's BString-only key read
-        // rejects.
-        val stringOk =
-          options.get("assume_uniform_storage").exists(_.toBoolean)
-        FieldResolve.resolve(tableSchema, o.expression, mapping)
-          .filter(r => nullsOk && (TopNTypes.contains(r.dataType) ||
-            (r.dataType == org.apache.spark.sql.types.StringType && stringOk)))
-          // a COMPUTED order key refuses (r17): the bounded heap reads
-          // STORED docs before injection — mirrors the server gate
-          .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-          .map(r => (r.docPath, desc, r.dataType))
-      }
-    if (spec.contains(None)) false
-    else { topN = Some((spec.flatten, n)); true }
+    // STRING order keys (r18): admitted under uniform storage alone —
+    // the reader's bounded heap compares READ values itself, and its
+    // string comparator is CODE-POINT order (exactly Spark's
+    // UTF8String/UTF-8-byte order, GraftPartitionReader.cmpStrings), so
+    // the selection is Spark-exact for ANY strings — no ascii_columns
+    // declaration needed on this transport (unlike the server arm, where
+    // the CURSOR owns the order). Uniform storage is still required: a
+    // non-uniform string read spans four storage brackets the heap's
+    // BString-only key read rejects.
+    val stringOk = options.get("assume_uniform_storage").exists(_.toBoolean)
+    PushRules.topNKeys(orders, cols, r => TopNTypes.contains(r.dataType) ||
+        (r.dataType == org.apache.spark.sql.types.StringType && stringOk)) match {
+      case Some(keys) =>
+        topN = Some((keys.map { case (r, desc) => (r.docPath, desc, r.dataType) }, n))
+        true
+      case None => false
+    }
   }
 
   /** Offset (skip) pushdown — the mongo.input.skip analog
@@ -692,24 +630,14 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
       // the option-level PER-PARTITION cursor limit changes row counts
       !options.contains("limit")
     if (!eligible) return false
-    // MIN/MAX columns may be nested subfields — resolve to the dotted
-    // doc path; the single-field scan below decodes just that subpath
-    def named(e: org.apache.spark.sql.connector.expressions.Expression):
-        Option[(String, org.apache.spark.sql.types.DataType)] =
-      FieldResolve.resolve(tableSchema, e, mapping)
-        .filter(r => AggPushTypes.contains(r.dataType))
-        // a COMPUTED column has no stored field the single-field probe
-        // scan could walk (r17) — the grouped partial path handles it
-        .filterNot(r => computedOuts.contains(r.docPath.split('.').head))
-        .map(r => (r.docPath, r.dataType))
-    val items = aggregation.aggregateExpressions.toSeq.map {
-      case _: aggregate.CountStar => Some(AggPush.RowCount)
-      case m: aggregate.Min => named(m.column).map { case (c, t) => AggPush.MinOf(c, t) }
-      case m: aggregate.Max => named(m.column).map { case (c, t) => AggPush.MaxOf(c, t) }
-      case _ => None
+    // MIN/MAX columns may be nested subfields; the single-field scan
+    // decodes just that subpath. A COMPUTED column has no stored field
+    // to walk (r17) — the grouped partial path handles it
+    PushRules.globalAggregates(aggregation, cols,
+        r => AggPushTypes.contains(r.dataType)) match {
+      case Some(items) => aggPushed = Some(items); true
+      case None => false
     }
-    if (items.isEmpty || items.contains(None)) false
-    else { aggPushed = Some(items.flatten); true }
   }
 
   /** GROUPED / filtered-global aggregate pushdown: per-split partial
@@ -735,8 +663,7 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     // path; the reader's projected decode (Proj trie) then materializes
     // ONLY those subpaths. Zero aggregates + >=1 group key = SELECT
     // DISTINCT (each split emits its distinct keys as partial rows).
-    GroupAggParse.parse(aggregation,
-      e => FieldResolve.resolve(tableSchema, e, mapping),
+    GroupAggParse.parse(aggregation, cols.resolve,
       r => GroupKeyTypes.contains(r.dataType),
       r => GroupMinMaxTypes.contains(r.dataType)) match {
       case Some(p) =>
@@ -796,24 +723,9 @@ final class GraftScanBuilder(tableSchema: StructType, options: Map[String, Strin
     // with Spark's own .limit for the global semantic)
     val optionLimit = options.get("limit").map(_.toInt)
     val effLimit = (limit ++ optionLimit ++ topN.map(_._2)).reduceOption(math.min)
-    // pre-unwind PARENT pruning (BQuery.parentPrune): under a non-outer
-    // unwind with a pushed post-unwind match, parents with no satisfying
-    // element drop BEFORE the per-element flatten — a prune, never the
-    // filter (the exact post match still runs on unwound docs). Skipped
-    // for ARRAY/MAP elements (nested-array ElemMatch traversal is a
-    // documented divergence) and OUTER unwinds (a never-matching array
-    // still owes its null-element row to a null-matching post query).
-    val unwindPrune: BQuery = {
-      val safe = unwind.exists(!_.outer) &&
-        options.get("unwind_element").forall(e =>
-          tableSchema.fields.find(_.name == e).forall(_.dataType match {
-            case _: org.apache.spark.sql.types.ArrayType |
-                 _: org.apache.spark.sql.types.MapType => false
-            case _ => true
-          }))
-      if (!safe || unwindPost == BQuery.True) BQuery.True
-      else BQuery.parentPrune(unwindPost, unwind.get.path)
-    }
+    // pre-unwind PARENT pruning under a non-outer unwind
+    val unwindPrune = PushRules.unwindPrune(unwind.filterNot(_.outer).map(_.path),
+      options.get("unwind_element"), tableSchema, unwindPost)
     new GraftScan(required,
       BQuery.and(BQuery.and(optionQuery, pushedQuery), unwindPrune),
       options, effLimit, mapping,
@@ -1023,11 +935,6 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     */
   @volatile private var runtimeIn: Map[String, Seq[BsonValue]] = Map.empty
 
-  /** The Spark column that READS doc field `f` (column_mapping aware). */
-  private def sparkColFor(f: String): Option[String] =
-    mapping.find(_._2 == f).map(_._1)
-      .orElse(if (mapping.contains(f)) None else Some(f))
-
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // a pushed limit/offset counts rows of the UNFILTERED stream — any
     // runtime narrowing under it would change which rows it keeps
@@ -1039,23 +946,15 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
       // would drive key-range planning / query narrowing over STORED
       // docs, where the synthetic field does not exist
       .filterNot(k => computedCols.exists(_.out == k))
-      .flatMap(sparkColFor)
+      .flatMap(PushRules.sparkColFor(mapping, _))
       .filter(readSchema().fieldNames.contains)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
 
-  override def filter(predicates: Array[Predicate]): Unit = {
-    val parsed = predicates.toSeq.flatMap(RuntimeFilters.parse)
-    val merged = parsed.groupBy(_._1).map { case (col, vs) =>
-      // spark column -> doc field (column_mapping analog of the pushed
-      // filter translator)
-      mapping.getOrElse(col, col) -> vs.flatMap(_._2).distinct
-    }
-    // a degenerate giant IN-set would cost more to evaluate per row /
-    // per split than it prunes; scan everything instead
-    runtimeIn =
-      if (merged.valuesIterator.map(_.size).sum > 10000) Map.empty else merged
-  }
+  // keyed by doc field (the column_mapping analog of the pushed filter
+  // translator)
+  override def filter(predicates: Array[Predicate]): Unit =
+    runtimeIn = PushRules.runtimeIn(predicates, col => mapping.getOrElse(col, col))
 
   /** Structured Streaming entry: new dump FILES landing under `path`
     * stream in as micro-batches ([[GraftBsonMicroBatchStream]]). Pushed
@@ -1075,20 +974,8 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
     new GraftBsonMicroBatchStream(requiredSchema, query, options, mapping)
   }
 
-  override def readSchema(): StructType = (grouped, pushedAgg) match {
-    case (Some(g), _) =>
-      // Spark's grouped-pushdown layout: group columns first, then the
-      // aggregate columns (V2ScanRelationPushDown's zip order)
-      g.schema
-    case (None, Some(items)) =>
-      import org.apache.spark.sql.types._
-      StructType(items.map {
-        case AggPush.RowCount => StructField("count(*)", LongType, nullable = false)
-        case AggPush.MinOf(c, t) => StructField(s"min($c)", t)
-        case AggPush.MaxOf(c, t) => StructField(s"max($c)", t)
-      })
-    case _ => requiredSchema
-  }
+  override def readSchema(): StructType =
+    PushRules.readSchema(grouped, pushedAgg, requiredSchema)
   override def toBatch: Batch = this
 
   /** Report the per-partition cursor sort (`sort` option) to Catalyst so
@@ -1115,12 +1002,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
       case Some(docKey) if unwind.exists(u =>
           docKey == u.path || docKey.startsWith(u.path + ".")) => Array.empty
       case Some(docKey) if !options.contains("collections") =>
-        // the Spark column that READS doc field docKey: an explicit
-        // mapping entry wins; the bare name is only valid when that
-        // column is not itself remapped to a different doc field
-        val sparkCol = mapping.find(_._2 == docKey).map(_._1)
-          .orElse(if (mapping.contains(docKey)) None else Some(docKey))
-        sparkCol match {
+        PushRules.sparkColFor(mapping, docKey) match {
           case Some(c) if requiredSchema.fieldNames.contains(c) =>
             Array(org.apache.spark.sql.connector.expressions.Expressions.sort(
               org.apache.spark.sql.connector.expressions.Expressions.column(c),
@@ -1350,17 +1232,7 @@ final class GraftScan(requiredSchema: StructType, query: BQuery,
         // whole key-range partitions inside Planners.plan. String values
         // use Spark-read semantics (the join compares READ values)
         val rtQuery = rt.foldLeft(BQuery.True: BQuery) { case (acc, (f, vs)) =>
-          val strs = vs.collect { case BString(s) => s }
-          val longs = vs.collect { case BInt64(x) => x }
-          // TimestampType runtime values arrive as BDate millis; the
-          // join compares READ values, so match BOTH timestamp storages
-          val dates = vs.collect { case graft.bson.BDate(ms) => ms }
-          BQuery.and(acc,
-            if (strs.size == vs.size) BQuery.ReadStrIn(f, strs)
-            else if (longs.size == vs.size) BQuery.ReadLongIn(f, longs)
-            else if (dates.size == vs.size && vs.nonEmpty)
-              BQuery.ReadTimeIn(f, dates.map(_ * 1000L))
-            else BQuery.In(f, vs))
+          BQuery.and(acc, PushRules.runtimeInQuery(f, vs))
         }
         planCollection(routed, defStrategy, defSplitSize, defKey, defMinDocs,
           defFilterEmpty, BQuery.and(query, rtQuery), limit, sortKey, offset,
@@ -2391,21 +2263,12 @@ final class GraftBatchWrite(writeSchema: StructType, queryId: String,
       }
     val result = stagedResults.map(_.result)
       .foldLeft(graft.store.BulkResult.empty)(_ merge _)
-    if (result.errors.nonEmpty) {
-      // mongo's unordered bulk attempts everything, then THROWS the
-      // accumulated errors — a "successful" Spark write must not hide
-      // dropped rows; opt out explicitly with ignore_write_errors
-      val msg = s"unordered bulk completed with ${result.errors.size} error(s): " +
-        result.errors.take(5).mkString("; ")
-      if (options.get("ignore_write_errors").exists(_.toBoolean))
-        System.err.println(s"[graftbson] $msg")
-      else {
-        // nothing was promoted: the failed job leaves every shard exactly
-        // as it was
-        graft.store.ShardApply.cleanupStages(path, jobTag)
-        GraftBatchWrite.deleteRecursively(jobDir)
-        throw new IllegalStateException(msg)
-      }
+    graft.store.BulkResult.unignoredErrors(result, options, "graftbson").foreach { msg =>
+      // nothing was promoted: the failed job leaves every shard exactly
+      // as it was
+      graft.store.ShardApply.cleanupStages(path, jobTag)
+      GraftBatchWrite.deleteRecursively(jobDir)
+      throw new IllegalStateException(msg)
     }
     // all shards staged successfully: promote (metadata-only renames in
     // shard order, manifest-guarded so a coordinator crash mid-loop rolls

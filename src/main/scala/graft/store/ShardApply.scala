@@ -20,7 +20,25 @@ final case class BulkResult(inserted: Long, matched: Long, modified: Long,
       modified + o.modified, upserted + o.upserted, errors ++ o.errors)
 }
 
-object BulkResult { val empty: BulkResult = BulkResult(0, 0, 0, 0) }
+object BulkResult extends org.apache.spark.internal.Logging {
+  val empty: BulkResult = BulkResult(0, 0, 0, 0)
+
+  /** An unordered bulk attempts every model, then THROWS the accumulated
+    * errors (mongo's rule): a "successful" Spark write must not hide
+    * dropped rows. Returns the failure message when `r` carries errors,
+    * unless the write opted out with `ignore_write_errors=true` — then
+    * the errors are logged as a warning and the write stands.
+    */
+  def unignoredErrors(r: BulkResult, options: Map[String, String],
+      sink: String): Option[String] =
+    if (r.errors.isEmpty) None
+    else {
+      val msg = s"unordered bulk completed with ${r.errors.size} error(s): " +
+        r.errors.take(5).mkString("; ")
+      if (!options.get("ignore_write_errors").exists(_.toBoolean)) Some(msg)
+      else { logWarning(s"$sink: $msg (ignore_write_errors=true)"); None }
+    }
+}
 
 /** Shard routing for the sharded store: a model routes to ONE shard when
   * its identity is known (`_id` on an insert, an `_id`-equality conjunct

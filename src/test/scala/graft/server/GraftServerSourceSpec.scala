@@ -949,6 +949,27 @@ class GraftServerSourceSpec extends SparkSpec {
     assert(s.queryExecution.executedPlan.toString.contains("Exists(_id"),
       s.queryExecution.executedPlan.toString)
   }
+
+  test("unordered bulk errors fail the write unless explicitly ignored") {
+    import spark.implicits._
+    val dir = freshDir()
+    Seq((1L, "a")).toDF("_id", "v")
+      .write.format("graftserver").options(serverOpts(dir, "db.dup"))
+      .mode("append").save()
+    val dup = Seq((1L, "b"), (2L, "c")).toDF("_id", "v")
+    val e = intercept[Exception] {
+      dup.write.format("graftserver").options(serverOpts(dir, "db.dup"))
+        .option("bulk_ordered", "false").mode("append").save()
+    }
+    assert(e.getMessage != null)
+    // opt-out: completes, the stored row is kept and the new one written
+    dup.write.format("graftserver").options(serverOpts(dir, "db.dup"))
+      .option("bulk_ordered", "false").option("ignore_write_errors", "true")
+      .mode("append").save()
+    val rows = spark.read.format("graftserver").options(serverOpts(dir, "db.dup"))
+      .load().select($"_id", $"v").as[(Long, String)].collect().toSet
+    assert(rows === Set((1L, "a"), (2L, "c")))
+  }
 }
 
 /** Wraps the fake transport and counts every round-trip JVM-wide, so a
